@@ -1,16 +1,13 @@
-"""MERGE INTO emulation (upsert / row-level delete) without Delta/Iceberg.
+"""MERGE INTO emulation (upsert) without Delta/Iceberg.
 
-K7 in SURVEY §2.1: the reference deletes duplicate objects by id
-(deduplicate.py:25-26) and drops collections. With Iceberg this is
-``MERGE INTO … WHEN MATCHED``; on the parquet fallback we emulate with the
-standard anti-join + union rewrite (guide: "CDC/SCD2 → emulate with
-anti-join + union + window"):
+K7 in SURVEY §2.1. With Iceberg this is ``MERGE INTO … WHEN MATCHED``;
+on parquet we emulate with the standard anti-join + union rewrite
+(guide: "CDC/SCD2 → emulate with anti-join + union + window"):
 
     upsert(target, source, key) = source ∪ (target ⟕anti source)
-    delete(target, tombstones)  = target ⟕anti tombstones
 
-Deterministic, one shuffle each, and expressible in ANSI SQL for the
-DuckDB oracle.
+Deterministic, one shuffle, and expressible in ANSI SQL for the DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -26,11 +23,4 @@ def merge_upsert(target: DataFrame, source: DataFrame,
     return source.unionByName(survivors)
 
 
-def merge_delete(target: DataFrame, tombstones: DataFrame,
-                 key_cols: list[str]) -> DataFrame:
-    """Row-level delete by key (K7)."""
-    return target.join(tombstones.select(*key_cols).distinct(),
-                       key_cols, "left_anti")
-
-
-__all__ = ["merge_upsert", "merge_delete"]
+__all__ = ["merge_upsert"]

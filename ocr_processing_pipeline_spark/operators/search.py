@@ -21,9 +21,7 @@ BM25 parameters k1=1.2, b=0.75 (Robertson et al., the standard defaults).
 
 Shared projections here are localCheckpointed per query — the right
 shape for one-shot batch jobs, with a GC-lifetime and lineage-truncation
-trade for long-lived/serving drivers: see docs/serving.md for the full
-rule (drop refs / gc.collect in a long JVM; materialize to a table and
-pass checkpoint=False in a serving tier).
+trade for long-lived drivers: see docs/serving.md for the full rule.
 """
 
 from __future__ import annotations
@@ -44,8 +42,7 @@ def _tok_array(text_col):
 
 
 def bm25_scores(df: DataFrame, text_col: str, key_col: str,
-                query_terms: list[str], round_to: int = 4,
-                checkpoint: bool = True) -> DataFrame:
+                query_terms: list[str], round_to: int = 4) -> DataFrame:
     """(key, bm25) for every doc containing ≥1 query term. Single corpus
     pass; see module docstring for the scale contract.
 
@@ -55,19 +52,13 @@ def bm25_scores(df: DataFrame, text_col: str, key_col: str,
     FileScan — 3 full corpus reads for one query. Materializing the
     projection (a few bytes per doc — no text) makes the physical plan
     scan the corpus exactly ONCE; tests/test_plans.py counts the scans.
-
-    ``checkpoint=False`` opts out for serving / long-lived drivers that
-    would rather re-scan than truncate lineage or pin executor blocks
-    until Python GC (module docstring); the one-shot batch default keeps
-    the single-scan plan.
     """
     terms = [t.lower() for t in query_terms]
     toks = _tok_array(text_col)
-    base = df.select(F.col(key_col).alias("key"),
-                     F.size(toks).alias("doc_len"),
-                     F.filter(toks, lambda t: t.isin(terms)).alias("hits"))
-    if checkpoint:
-        base = base.localCheckpoint(eager=False)
+    base = (df.select(F.col(key_col).alias("key"),
+                      F.size(toks).alias("doc_len"),
+                      F.filter(toks, lambda t: t.isin(terms)).alias("hits"))
+            .localCheckpoint(eager=False))
     stats = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg(F.when(F.col("doc_len") > 0, F.col("doc_len")))
@@ -152,10 +143,19 @@ def hybrid_topk(df: DataFrame, text_col: str, key_col: str,
             .orderBy(F.desc("score"), F.asc("key")).limit(k))
 
 
+def _top_doc_survivors(df: DataFrame, text_col: str, key_col: str,
+                       query_terms: list[str], doc_k: int) -> DataFrame:
+    """Stages 1+2 of ``layered_topk``: the corpus rows of the doc-level
+    BM25 top ``doc_k``, restricted by a broadcast LEFT SEMI join."""
+    top_docs = (bm25_topk(df, text_col, key_col, query_terms, k=doc_k)
+                .select("key"))
+    return df.join(F.broadcast(top_docs),
+                   df[key_col] == top_docs["key"], "left_semi")
+
+
 def layered_topk(df: DataFrame, text_col: str, key_col: str,
                  query_terms: list[str], doc_k: int = 20, k: int = 10,
-                 chunk_tokens: int = 64, round_to: int = 4,
-                 checkpoint: bool = True) -> DataFrame:
+                 chunk_tokens: int = 64, round_to: int = 4) -> DataFrame:
     """Coarse-to-fine layered search (Query/layered_search.py:74-104:
     doc-level top-k → Filter.by_property('doc_id').contains_any →
     chunk-level search within the survivors).
@@ -170,25 +170,17 @@ def layered_topk(df: DataFrame, text_col: str, key_col: str,
     Returns (doc_id-as-key, chunk_no, score).
     """
     terms = [t.lower() for t in query_terms]
-    top_docs = (bm25_topk(df, text_col, key_col, query_terms, k=doc_k)
-                .select("key"))
-    survivors = df.join(
-        F.broadcast(top_docs),
-        df[key_col] == top_docs["key"], "left_semi")
-    tok = (survivors
-           .select(F.col(key_col).alias("key"),
-                   F.posexplode(_tok_array(text_col))
-                   .alias("pos0", "tok"))
-           .withColumn("chunk_no",
-                       F.floor(F.col("pos0") / chunk_tokens).cast("int")))
     # the chunk-token projection feeds the length leg AND the term-hit
     # leg; without the checkpoint each re-runs the doc-level top-k +
     # semi-join + explode (r7 plan audit: documents scanned 4x in one
     # query; checkpointed: 1.4-1.6 s -> 1.0-1.2 s, output identical).
-    # ``checkpoint=False`` opts out for serving tiers (docs/serving.md)
-    # and lets the plan tests see the pre-checkpoint join shape.
-    if checkpoint:
-        tok = tok.localCheckpoint(eager=False)
+    tok = (_top_doc_survivors(df, text_col, key_col, query_terms, doc_k)
+           .select(F.col(key_col).alias("key"),
+                   F.posexplode(_tok_array(text_col))
+                   .alias("pos0", "tok"))
+           .withColumn("chunk_no",
+                       F.floor(F.col("pos0") / chunk_tokens).cast("int"))
+           .localCheckpoint(eager=False))
     clen = (tok.groupBy("key", "chunk_no")
             .agg(F.count(F.lit(1)).alias("chunk_len")))
     ctf = (tok.filter(F.col("tok").isin(terms))

@@ -49,17 +49,6 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
                 5)))
 
 
-def quality_score(df: DataFrame, text_col: str,
-                  min_tokens: int = 5, max_punct_ratio: float = 0.3
-                  ) -> DataFrame:
-    """Boolean keep/drop quality gate + the features it derives from."""
-    feats = quality_features(df, text_col)
-    return feats.withColumn(
-        "keep",
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("punct_ratio") <= max_punct_ratio))
-
-
 def langid(df: DataFrame, text_col: str) -> DataFrame:
     """Relational language ID: argmax of per-language stopword hits.
 
@@ -131,6 +120,6 @@ def doc_fingerprint(df: DataFrame, text_col: str) -> DataFrame:
                                r"\s+", " ")))
 
 
-__all__ = ["token_count_col", "quality_features", "quality_score",
-           "langid", "doc_fingerprint", "canonicalize_url", "url_host",
+__all__ = ["token_count_col", "quality_features", "langid",
+           "doc_fingerprint", "canonicalize_url", "url_host",
            "LANG_PATTERNS"]

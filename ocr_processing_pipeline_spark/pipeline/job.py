@@ -174,8 +174,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         extract_kw = {"max_page_bytes": None}
     else:
         extract_kw = {"max_page_bytes": max_page_bytes}
-    docs = extract_mod.extract_docs(todo, **extract_kw).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    docs = lineage.with_bucket(
+        extract_mod.extract_docs(todo, **extract_kw), n_buckets)
     docs_path = os.path.join(out_dir, "docs")
     lineage.write_partitioned(docs, docs_path)
 
@@ -185,27 +185,25 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     docs_this_run = spark.read.parquet(docs_path).filter(
         F.col("bucket").isin(run_buckets))
 
-    chunks = chunk_mod.chunk_docs(docs_this_run).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    chunks = lineage.with_bucket(chunk_mod.chunk_docs(docs_this_run),
+                                 n_buckets)
     chunks_path = os.path.join(out_dir, "chunks")
     lineage.write_partitioned(chunks, chunks_path)
 
     chunks_this_run = spark.read.parquet(chunks_path).filter(
         F.col("bucket").isin(run_buckets))
-    edges = ner_mod.link_entities(chunks_this_run, gaz_bc).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    edges = lineage.with_bucket(
+        ner_mod.link_entities(chunks_this_run, gaz_bc), n_buckets)
     edges_path = os.path.join(out_dir, "edges")
     lineage.write_partitioned(edges, edges_path)
 
     if with_mentions:
         # raw mention spans (FIXTURES.md §3 'entities' table) — optional:
         # an extra scan pass over chunks, off by default
-        mentions = (ner_mod.extract_mentions(chunks_this_run, gaz_bc)
-                    .join(chunks_this_run.select("chunk_id", "url"),
-                          "chunk_id")
-                    .withColumn("bucket", F.pmod(F.xxhash64("url"),
-                                                 F.lit(n_buckets))
-                                .cast("int")))
+        mentions = lineage.with_bucket(
+            ner_mod.extract_mentions(chunks_this_run, gaz_bc)
+            .join(chunks_this_run.select("chunk_id", "url"), "chunk_id"),
+            n_buckets)
         lineage.write_partitioned(
             mentions, os.path.join(out_dir, "mentions"))
 

@@ -22,8 +22,9 @@ next run reprocesses those buckets and the overwrite removes any partial
 output — no duplicates (verified by tests/test_resume.py).
 
 On a cluster this maps 1:1 onto Iceberg: step 2+3 become a single Iceberg
-transaction (append + checkpoint rows in one commit). The Iceberg writer is
-gated behind an import-try because the sandbox image has no Iceberg jars.
+transaction (append + checkpoint rows in one commit), by routing
+``write_partitioned`` and ``append_checkpoint`` through ``writeTo``. No
+Iceberg writer exists here: the runtime ships no Iceberg jars.
 """
 
 from __future__ import annotations
@@ -41,11 +42,9 @@ CHECKPOINT_SCHEMA = (
 )
 
 
-def with_bucket(df: DataFrame, n_buckets: int,
-                url_col: str = "url") -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets))
-        .cast("int"))
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
 def committed_buckets(spark: SparkSession, checkpoint_path: str,
@@ -134,14 +133,9 @@ def empty_bucket_sentinels(spark: SparkSession, buckets: list[int],
     every no-op resume (ADVICE r4). A run that exhausted its todo set
     commits these sentinels for the untouched empty buckets; row_count 0
     distinguishes them in every metrics query."""
-    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None)
+    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None, None)
             for b in buckets]
-    schema = (
-        "bucket int, table_name string, row_count long, n_urls long, "
-        "warc_ts_min timestamp, warc_ts_max timestamp, "
-        "failure_counts map<string,long>, mean_extract_us double, "
-        "max_extract_us long")
-    return (spark.createDataFrame(rows, schema)
+    return (spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
             .withColumn("committed_at", F.current_timestamp()))
 
 

@@ -114,16 +114,15 @@ def test_layered_search_broadcast_semi_join(spark):
     checkpoints the chunk-token projection (its two consumer legs would
     otherwise re-run the top-k + semi-join + explode each — r7), which
     hides the join inside the materialized prefix; assert the join shape
-    on the checkpoint-free operator and the shared-leg shape (zero
-    parquet scans, checkpoint reads) on the registered query."""
+    on the stage 1+2 helper and the shared-leg shape (zero parquet
+    scans, checkpoint reads) on the registered query."""
     import os
 
-    from ocr_processing_pipeline_spark.operators.search import layered_topk
+    from ocr_processing_pipeline_spark.operators.search import (
+        _top_doc_survivors)
     d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    p = plan(layered_topk(d, "text", "doc_id",
-                          ["spark", "query", "window"],
-                          doc_k=20, k=10, chunk_tokens=64,
-                          checkpoint=False))
+    p = plan(_top_doc_survivors(d, "text", "doc_id",
+                                ["spark", "query", "window"], doc_k=20))
     assert "LeftSemi" in p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     preg = plan(QUERIES["layered_search"].fn(spark, SF_DIR))

@@ -141,3 +141,23 @@ def test_noop_resume_never_touches_input(spark, corpus_dir, tmp_path):
     c = run_pipeline(spark, str(tmp_path / "does_not_exist.parquet"),
                      corpus_dir, out, n_buckets=N_BUCKETS)
     assert c["docs"] == 0 and "skipped" in c
+
+
+def test_checkpoint_row_sources_share_schema(spark, corpus_dir):
+    """run_pipeline unions the per-bucket rows with the empty-bucket
+    sentinels by name before one append: both sources must carry exactly
+    CHECKPOINT_SCHEMA (names and types, nullability aside)."""
+    from ocr_processing_pipeline_spark.pipeline import lineage
+    from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    expected = fields(spark.createDataFrame([], lineage.CHECKPOINT_SCHEMA))
+    docs = lineage.with_bucket(
+        extract_docs(spark.read.parquet(f"{corpus_dir}/pages.parquet")),
+        N_BUCKETS)
+    assert fields(lineage.checkpoint_rows_with_failures(docs, "docs")) \
+        == expected
+    assert fields(lineage.empty_bucket_sentinels(spark, [0, 3], "docs")) \
+        == expected
