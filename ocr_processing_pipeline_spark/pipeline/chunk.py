@@ -24,33 +24,38 @@ CHUNKS_SCHEMA = (
 )
 
 
-def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+CHUNK_COLUMNS = ("doc_id", "url", "warc_ts", "chunk_id", "chunk_order",
+                 "content", "lang", "span_start", "span_end", "n_tokens",
+                 "n_sentences")
+
+
+def chunk_rows(doc_id, url, warc_ts, text, lang) -> list[dict]:
+    """One document's chunk rows (CHUNK_COLUMNS); none for empty text.
+    Shared by chunk_docs and the extraction job's fused pass (job.py)."""
     from ..extractor.chunking import chunk_document
+    if not text:
+        return []
+    return [{
+        "doc_id": doc_id,
+        "url": url,
+        "warc_ts": warc_ts,
+        "chunk_id": c["chunk_id"],
+        "chunk_order": c["chunk_order"],
+        "content": c["content"],
+        "lang": lang,
+        "span_start": c["span_start"],
+        "span_end": c["span_end"],
+        "n_tokens": c["n_tokens"],
+        "n_sentences": c["n_sentences"],
+    } for c in chunk_document(str(doc_id), text)]
+
+
+def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        rows = []
-        for doc_id, url, warc_ts, text, lang in zip(
-                pdf["doc_id"], pdf["url"], pdf["warc_ts"], pdf["text"],
-                pdf["lang"]):
-            if not text:
-                continue
-            for c in chunk_document(str(doc_id), text):
-                rows.append({
-                    "doc_id": doc_id,
-                    "url": url,
-                    "warc_ts": warc_ts,
-                    "chunk_id": c["chunk_id"],
-                    "chunk_order": c["chunk_order"],
-                    "content": c["content"],
-                    "lang": lang,
-                    "span_start": c["span_start"],
-                    "span_end": c["span_end"],
-                    "n_tokens": c["n_tokens"],
-                    "n_sentences": c["n_sentences"],
-                })
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "url", "warc_ts", "chunk_id", "chunk_order",
-            "content", "lang", "span_start", "span_end", "n_tokens",
-            "n_sentences"])
+        rows = [r for doc in zip(pdf["doc_id"], pdf["url"], pdf["warc_ts"],
+                                 pdf["text"], pdf["lang"])
+                for r in chunk_rows(*doc)]
+        yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
 
 def chunk_docs(docs: DataFrame) -> DataFrame:
@@ -62,4 +67,4 @@ def chunk_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-__all__ = ["chunk_docs", "CHUNKS_SCHEMA"]
+__all__ = ["chunk_docs", "chunk_rows", "CHUNKS_SCHEMA", "CHUNK_COLUMNS"]

@@ -1,19 +1,25 @@
 """End-to-end extraction job: pages → docs + chunks + mentions + edges.
 
-Partitioning strategy (north rule: explicit skew handling + url-hash range
+Partitioning strategy (north rule: explicit skew handling + url-hash
 partitioning + AQE):
 
-- The corpus is host-skewed (one host ≈ 50% of rows, FIXTURES.md §1). A
-  naive ``repartition(host)`` would put half the corpus in one task. We
-  repartition on the **salted url-hash bucket** —
-  ``pmod(xxhash64(url), n_buckets)`` — which is uniform regardless of host
-  skew (xxhash64 of distinct urls ≈ uniform), and is simultaneously the
-  resumability commit unit (lineage.py). Per-doc cost skew (a giant page)
-  is bounded by the Arrow batch cap (session.py) + AQE.
-- All three derived tables are computed from ONE pass over pages: extract →
-  chunk → ner are narrow (mapInPandas) transforms, so the only shuffle in
-  the whole job is the single repartition to n_buckets, reused by every
-  write (docs/chunks/edges inherit the bucket partitioning).
+- The corpus is host-skewed (one host ≈ 50% of rows, FIXTURES.md §1), so
+  the job never partitions on host. Its unit is the **url-hash bucket**
+  ``pmod(xxhash64(url), n_buckets)``: xxhash64 of distinct urls is about
+  uniform, so buckets hold about equal page counts whatever the host
+  skew, and the bucket is also the resumability commit unit (lineage.py).
+- The one shuffle is ``repartition(n, "bucket")``, and it is NOT
+  bucket-aligned: Spark re-hashes the bucket ids with Murmur3, so
+  several buckets can share a partition while others stay empty (bench
+  corpus, seed 1, 8 buckets: 551 / 375 / 210 / 187 / 177 / 0 / 0 / 0
+  rows per partition). Empty partitions still start a Python task.
+  Per-doc cost skew (a giant page) is bounded by the Arrow batch cap
+  (session.py) and the oversized-page gate (extract.py).
+- After that shuffle, ONE Python pass (mapInPandas) runs extract → chunk
+  → link per page and returns the docs row with its chunks and edges as
+  arrays: one Python task per partition per job. The pass is
+  materialized once (localCheckpoint, docs/serving.md), and the docs,
+  chunks and edges writes and the checkpoint rows all read it.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
 This file is also the ``spark-submit --py-files`` entry point:
@@ -31,7 +37,8 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import chunk as chunk_mod
@@ -40,6 +47,44 @@ from . import lineage
 from . import ner as ner_mod
 
 DEFAULT_N_BUCKETS = 64
+
+# One page's row out of the job's Python pass: the docs fields, plus the
+# page's chunk rows and edge rows as arrays of the stage schemas.
+PASS_SCHEMA = (f"{extract_mod.DOCS_UDF_SCHEMA}, "
+               f"chunks array<struct<{chunk_mod.CHUNKS_SCHEMA}>>, "
+               f"edges array<struct<{ner_mod.EDGES_SCHEMA}>>")
+
+
+def extract_chunk_link(
+        todo: DataFrame, gaz_bc, n_partitions: int,
+        max_page_bytes: int | None = extract_mod.DEFAULT_MAX_PAGE_BYTES
+) -> DataFrame:
+    """Bucketed pages → one PASS_SCHEMA row per page: the repartition to
+    ``n_partitions`` on bucket, then one mapInPandas that runs the
+    per-batch bodies of extract_docs → chunk_docs → link_entities
+    (extract_columns, chunk_rows, link_rows) on each page."""
+    def run(batches):
+        idx, memo = ner_mod._get_index_and_memo(gaz_bc)
+        for pdf in batches:
+            docs = extract_mod.extract_columns(pdf["html"], pdf["text"],
+                                               pdf["_oversized"])
+            chunks = [chunk_mod.chunk_rows(*doc) for doc in zip(
+                pdf["doc_id"], pdf["url"], pdf["warc_ts"], docs["text"],
+                pdf["lang"])]
+            edges = [[e for c in doc_chunks
+                      for e in ner_mod.link_rows(
+                          idx, memo, c["doc_id"], c["url"], c["chunk_id"],
+                          c["content"], c["warc_ts"])]
+                     for doc_chunks in chunks]
+            yield pd.DataFrame({
+                "url": pdf["url"], "warc_ts": pdf["warc_ts"],
+                "lang": pdf["lang"], **docs,
+                "chunks": chunks, "edges": edges})
+
+    pages = todo.repartition(n_partitions, "bucket")
+    return (extract_mod.gate_pages(pages, max_page_bytes)
+            .withColumn("doc_id", F.xxhash64("url"))   # chunk ids embed it
+            .mapInPandas(run, schema=PASS_SCHEMA))
 
 
 def _ensure_meta(out_dir: str, meta_path: str, n_buckets: int) -> None:
@@ -155,9 +200,6 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # re-bucket a half-written output.
     _ensure_meta(out_dir, meta_path, n_buckets)
 
-    # ONE shuffle: uniform url-hash bucket repartition (skew-proof).
-    todo = todo.repartition(min(n_buckets, len(run_buckets)), "bucket")
-
     gaz_bc = ner_mod.load_gazetteers(
         spark,
         os.path.join(gazetteers_dir, "persons.parquet"),
@@ -174,42 +216,37 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         extract_kw = {"max_page_bytes": None}
     else:
         extract_kw = {"max_page_bytes": max_page_bytes}
-    docs = lineage.with_bucket(
-        extract_mod.extract_docs(todo, **extract_kw), n_buckets)
+    # The job's one shuffle and one Python pass, materialized once
+    # (docs/serving.md batch rule): the three writes and the checkpoint
+    # rows below all read it, so the pass runs exactly once per job.
+    fused = extract_chunk_link(todo, gaz_bc,
+                               min(n_buckets, len(run_buckets)),
+                               **extract_kw).localCheckpoint(eager=False)
+    docs = lineage.with_bucket(extract_mod.docs_projection(fused), n_buckets)
+    chunks = fused.select(F.inline("chunks"))
     docs_path = os.path.join(out_dir, "docs")
-    lineage.write_partitioned(docs, docs_path)
-
-    # chunk + ner read back the just-written docs for THIS run's buckets:
-    # narrow scans (partition-pruned on bucket) — extraction runs exactly
-    # once, never recomputed for downstream stages.
-    docs_this_run = spark.read.parquet(docs_path).filter(
-        F.col("bucket").isin(run_buckets))
-
-    chunks = lineage.with_bucket(chunk_mod.chunk_docs(docs_this_run),
-                                 n_buckets)
     chunks_path = os.path.join(out_dir, "chunks")
-    lineage.write_partitioned(chunks, chunks_path)
-
-    chunks_this_run = spark.read.parquet(chunks_path).filter(
-        F.col("bucket").isin(run_buckets))
-    edges = lineage.with_bucket(
-        ner_mod.link_entities(chunks_this_run, gaz_bc), n_buckets)
     edges_path = os.path.join(out_dir, "edges")
-    lineage.write_partitioned(edges, edges_path)
+    lineage.write_partitioned(docs, docs_path)
+    lineage.write_partitioned(lineage.with_bucket(chunks, n_buckets),
+                              chunks_path)
+    lineage.write_partitioned(
+        lineage.with_bucket(fused.select(F.inline("edges")), n_buckets),
+        edges_path)
 
     if with_mentions:
         # raw mention spans (FIXTURES.md §3 'entities' table) — optional:
-        # an extra scan pass over chunks, off by default
+        # a second Python pass over the chunks, off by default
         mentions = lineage.with_bucket(
-            ner_mod.extract_mentions(chunks_this_run, gaz_bc)
-            .join(chunks_this_run.select("chunk_id", "url"), "chunk_id"),
+            ner_mod.extract_mentions(chunks, gaz_bc)
+            .join(chunks.select("chunk_id", "url"), "chunk_id"),
             n_buckets)
         lineage.write_partitioned(
             mentions, os.path.join(out_dir, "mentions"))
 
     # lineage/metrics rows LAST (commit point) — crash before this line ⇒
     # buckets get reprocessed and dynamically overwritten next run.
-    ckpt = lineage.checkpoint_rows_with_failures(docs_this_run, "docs")
+    ckpt = lineage.checkpoint_rows_with_failures(docs, "docs")
     if fail_after_buckets is None:
         # this run exhausted the todo set, so any bucket neither
         # previously committed nor producing rows now has ZERO pages —

@@ -29,10 +29,12 @@ Iceberg writer exists here: the runtime ships no Iceberg jars.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 CHECKPOINT_SCHEMA = (
     "bucket int, table_name string, row_count long, n_urls long, "
@@ -49,9 +51,13 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 def committed_buckets(spark: SparkSession, checkpoint_path: str,
                       table_name: str) -> DataFrame:
-    """Distinct committed bucket ids for a table ('' DataFrame if none)."""
+    """Distinct committed bucket ids for a table (empty if none).
+
+    The empty frame is built JVM-side: ``createDataFrame([])`` is a
+    Python RDD, which would launch a Python job just to broadcast
+    nothing into remaining_pages' anti-join."""
     if not _exists(checkpoint_path):
-        return spark.createDataFrame([], "bucket int")
+        return spark.range(0).select(F.lit(None).cast("int").alias("bucket"))
     return (spark.read.parquet(checkpoint_path)
             .filter(F.col("table_name") == table_name)
             .select("bucket").distinct())
@@ -132,10 +138,17 @@ def empty_bucket_sentinels(spark: SparkSession, buckets: list[int],
     corpora, falling back to listing + footer-reading the full input on
     every no-op resume (ADVICE r4). A run that exhausted its todo set
     commits these sentinels for the untouched empty buckets; row_count 0
-    distinguishes them in every metrics query."""
-    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None, None)
-            for b in buckets]
-    return (spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+    distinguishes them in every metrics query.
+
+    The rows are parsed JVM-side from one JSON literal against
+    CHECKPOINT_SCHEMA (unset fields are null), so committing them starts
+    no Python job, and every column but committed_at stays nullable."""
+    rows = json.dumps([{"bucket": int(b), "table_name": table_name,
+                        "row_count": 0, "n_urls": 0, "failure_counts": {}}
+                       for b in buckets])
+    schema = ArrayType(StructType.fromDDL(CHECKPOINT_SCHEMA))
+    return (spark.range(1, numPartitions=1)
+            .select(F.inline(F.from_json(F.lit(rows), schema)))
             .withColumn("committed_at", F.current_timestamp()))
 
 

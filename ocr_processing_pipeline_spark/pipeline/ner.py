@@ -111,45 +111,50 @@ def extract_mentions(chunks: DataFrame, gaz_bc) -> DataFrame:
             .mapInPandas(scan_batches, schema=MENTIONS_SCHEMA))
 
 
+EDGE_COLUMNS = ("doc_id", "url", "chunk_id", "subject", "predicate",
+                "object", "mention", "entity_type", "fuzzy_score",
+                "span_start", "span_end")
+
+
+def link_rows(idx, memo, doc_id, url, chunk_id, content,
+              warc_ts) -> list[dict]:
+    """One chunk's edge rows (EDGE_COLUMNS): gazetteer scan + link.
+    Shared by link_entities and the extraction job's fused pass (job.py)."""
+    from ..extractor.ner import link_mentions
+    doc_date = (warc_ts.date()
+                if warc_ts is not None and not pd.isna(warc_ts) else None)
+    return [{
+        "doc_id": doc_id, "url": url, "chunk_id": chunk_id,
+        "subject": chunk_id,
+        "predicate": e["predicate"],
+        "object": e["matched_url"],
+        "mention": e["mention"],
+        "entity_type": e["entity_type"],
+        "fuzzy_score": e["fuzzy_score"],
+        "span_start": e["span_start"],
+        "span_end": e["span_end"],
+    } for e in link_mentions(idx.scan(content), idx, doc_date, content,
+                             memo=memo)]
+
+
 def link_entities(chunks: DataFrame, gaz_bc) -> DataFrame:
     """chunks → edges, one Arrow pass (scan + link fused, no shuffle)."""
     def link_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extractor.ner import link_mentions
         # worker-lifetime memo (see _get_index_and_memo): mention
         # frequency is Zipfian, so most link decisions repeat; the cache
         # turns O(chunks × fuzz) into O(distinct mentions × fuzz) — per
         # WORKER, not per task
         idx, memo = _get_index_and_memo(gaz_bc)
         for pdf in batches:
-            rows = []
-            for doc_id, url, chunk_id, content, warc_ts in zip(
-                    pdf["doc_id"], pdf["url"], pdf["chunk_id"],
-                    pdf["content"], pdf["warc_ts"]):
-                doc_date = (warc_ts.date()
-                            if warc_ts is not None and not pd.isna(warc_ts)
-                            else None)
-                mentions = idx.scan(content)
-                for e in link_mentions(mentions, idx, doc_date, content,
-                                       memo=memo):
-                    rows.append({
-                        "doc_id": doc_id, "url": url, "chunk_id": chunk_id,
-                        "subject": chunk_id,
-                        "predicate": e["predicate"],
-                        "object": e["matched_url"],
-                        "mention": e["mention"],
-                        "entity_type": e["entity_type"],
-                        "fuzzy_score": e["fuzzy_score"],
-                        "span_start": e["span_start"],
-                        "span_end": e["span_end"],
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "url", "chunk_id", "subject", "predicate",
-                "object", "mention", "entity_type", "fuzzy_score",
-                "span_start", "span_end"])
+            rows = [r for chunk in zip(pdf["doc_id"], pdf["url"],
+                                       pdf["chunk_id"], pdf["content"],
+                                       pdf["warc_ts"])
+                    for r in link_rows(idx, memo, *chunk)]
+            yield pd.DataFrame(rows, columns=EDGE_COLUMNS)
 
     return (chunks.select("doc_id", "url", "chunk_id", "content", "warc_ts")
             .mapInPandas(link_batches, schema=EDGES_SCHEMA))
 
 
 __all__ = ["load_gazetteers", "extract_mentions", "link_entities",
-           "MENTIONS_SCHEMA", "EDGES_SCHEMA"]
+           "link_rows", "MENTIONS_SCHEMA", "EDGES_SCHEMA", "EDGE_COLUMNS"]

@@ -1,8 +1,11 @@
 """Physical-plan shape assertions: pushdown, pruning, broadcast, narrowness.
 
 These lock in the scale properties SURVEY §4 promises: filters reach the
-parquet scan, projections prune columns, small dims broadcast, and the
-extraction pipeline is shuffle-free (mapInPandas chain over scan splits).
+parquet scan, projections prune columns, small dims broadcast, the
+public extract→chunk→NER operators chain without a shuffle, and the
+extraction job runs one Python pass per job (one MapInPandas after its
+one bucket repartition) and starts no Python job for its JVM-side
+bookkeeping frames.
 """
 
 import contextlib
@@ -75,6 +78,38 @@ def test_ner_stage_is_shuffle_free_and_broadcast_based(spark, corpus_dir):
     edges = link_entities(chunk_docs(extract_docs(pages)), gaz)
     p = plan(edges)
     assert "Exchange" not in p
+
+
+def test_job_runs_one_python_pass(spark, corpus_dir):
+    """The frame run_pipeline materializes: exactly one Exchange (the
+    bucket repartition) and exactly one MapInPandas (extract → chunk →
+    link fused), so a job launches one Python task per partition."""
+    from ocr_processing_pipeline_spark.pipeline import lineage
+    from ocr_processing_pipeline_spark.pipeline.job import extract_chunk_link
+    from ocr_processing_pipeline_spark.pipeline.ner import load_gazetteers
+    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
+    gaz = load_gazetteers(spark,
+                          f"{corpus_dir}/persons.parquet",
+                          f"{corpus_dir}/places.parquet",
+                          f"{corpus_dir}/orgs.parquet")
+    p = plan(extract_chunk_link(lineage.with_bucket(pages, 8), gaz, 8),
+             mode="simple")
+    assert p.count("MapInPandas") == 1, p
+    assert p.count("Exchange") == 1, p
+
+
+def test_checkpoint_bookkeeping_frames_are_jvm_side(spark, tmp_path):
+    """The fresh-run committed set and the empty-bucket sentinels are
+    built JVM-side: a Python-RDD source (ExistingRDD) would start a
+    Python job just to broadcast or append a handful of rows."""
+    from ocr_processing_pipeline_spark.pipeline import lineage
+    missing = lineage.committed_buckets(spark, str(tmp_path / "none"),
+                                        "docs")
+    assert missing.count() == 0
+    assert "ExistingRDD" not in plan(missing)
+    sentinels = lineage.empty_bucket_sentinels(spark, [0, 3], "docs")
+    assert "ExistingRDD" not in plan(sentinels)
+    assert sorted(r.bucket for r in sentinels.collect()) == [0, 3]
 
 
 def test_anti_join_resume_is_broadcast(spark, corpus_dir, tmp_path):

@@ -23,11 +23,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 COMMENT = {
     "flagship_pipeline": (
-        "The entire extract→chunk→NER chain is ONE narrow stage: scan → "
-        "MapInPandas ×3 with codegen'd projections between. No Exchange "
-        "anywhere — at 10^12 rows this is embarrassingly parallel over "
-        "scan splits; the gazetteer 'join' is a broadcast variable inside "
-        "the UDF."),
+        "The frame the extraction job materializes: scan → the one "
+        "Exchange (repartition on the url-hash bucket) → ONE MapInPandas "
+        "that runs extract → chunk → link per page and returns the docs "
+        "row with its chunks and edges as arrays, so a job launches one "
+        "Python task per partition. The docs/chunks/edges writes and "
+        "the checkpoint rows all read this pass once materialized; the "
+        "gazetteer 'join' is a broadcast variable inside the UDF."),
     "filtered_scan": (
         "Both predicates reach the parquet reader (PushedFilters) and the "
         "scan reads only the 4 referenced columns (ReadSchema) — at "
@@ -118,21 +120,22 @@ def main() -> None:
            "`python tools/dump_plans.py` — plans below are from THIS "
            "commit's code at sf0.001.\n"]
 
-    # flagship pipeline chain
-    from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
-    from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
-    from ocr_processing_pipeline_spark.pipeline.ner import (
-        link_entities, load_gazetteers)
+    # flagship pipeline: the job's fused pass
+    from ocr_processing_pipeline_spark.pipeline.job import (
+        DEFAULT_N_BUCKETS, extract_chunk_link)
+    from ocr_processing_pipeline_spark.pipeline.lineage import with_bucket
+    from ocr_processing_pipeline_spark.pipeline.ner import load_gazetteers
     corpus = pages_corpus_dir(SF_DIR)
     pages = spark.read.parquet(os.path.join(corpus, "pages.parquet"))
     gaz = load_gazetteers(spark,
                           os.path.join(corpus, "persons.parquet"),
                           os.path.join(corpus, "places.parquet"),
                           os.path.join(corpus, "orgs.parquet"))
-    edges = link_entities(chunk_docs(extract_docs(pages)), gaz)
-    out.append("## flagship_pipeline (pages → docs → chunks → edges)\n")
+    fused = extract_chunk_link(with_bucket(pages, DEFAULT_N_BUCKETS), gaz,
+                               DEFAULT_N_BUCKETS)
+    out.append("## flagship_pipeline (pages → docs + chunks + edges)\n")
     out.append(COMMENT["flagship_pipeline"] + "\n")
-    out.append("```\n" + plan_str(edges, "simple") + "```\n")
+    out.append("```\n" + plan_str(fused, "simple") + "```\n")
 
     for name in ("filtered_scan", "agg_pricing_summary",
                  "broadcast_join_parts", "semi_join_layered",
