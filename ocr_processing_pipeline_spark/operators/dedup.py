@@ -642,6 +642,13 @@ def simhash_candidates(sig: DataFrame, n_bands: int = 4,
     equality checked). The hot-bucket cap is unchanged semantically:
     bucket size = Σ group sizes = the doc-row count the per-doc
     formulation counted.
+
+    Precondition: ``sig`` carries one row per DISTINCT key (``simhash``
+    over a corpus with unique keys yields that). There is
+    deliberately no final doc-pair .distinct() — a key that repeats
+    comes back once per copy from the expansion joins, so its pairs are
+    emitted more than once. Run ``exact_dedup`` first when the corpus
+    can carry duplicate keys.
     """
     sig = sig.localCheckpoint(eager=False)
     groups = sig.groupBy("simhash").agg(F.count(F.lit(1)).alias("_gn"))

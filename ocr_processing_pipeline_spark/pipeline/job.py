@@ -1,4 +1,4 @@
-"""End-to-end extraction job: pages → docs + chunks + mentions + edges.
+"""End-to-end extraction job: pages → docs + chunks + edges + checkpoint.
 
 Partitioning strategy (north rule: explicit skew handling + url-hash
 partitioning + AQE):
@@ -22,12 +22,15 @@ partitioning + AQE):
   chunks and edges writes and the checkpoint rows all read it.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
-This file is also the ``spark-submit --py-files`` entry point:
+``main`` is the job's one CLI. Run it as a module:
 
     python -m ocr_processing_pipeline_spark.pipeline.job \
-        --pages .../pages.parquet --gazetteers-dir ... --out ... [--cpus N]
+        --pages .../pages.parquet --gazetteers-dir ... --out ... \
+        [--n-buckets N] [--no-resume] [--max-page-bytes B] [--cpus N]
 
-(tools/package_pyfiles.py builds the zip for --py-files.)
+or through spark-submit, which runs a driver FILE: tools/submit_job.py
+calls ``main`` with the same flags, and tools/package_pyfiles.py builds
+the zip for --py-files.
 """
 
 from __future__ import annotations
@@ -100,14 +103,12 @@ def _ensure_meta(out_dir: str, meta_path: str, n_buckets: int) -> None:
 def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                  out_dir: str, n_buckets: int = DEFAULT_N_BUCKETS,
                  resume: bool = True,
-                 with_mentions: bool = False,
-                 fail_after_buckets: int | None = None,
-                 max_page_bytes: int | None = None) -> dict:
+                 max_page_bytes: int | None =
+                 extract_mod.DEFAULT_MAX_PAGE_BYTES) -> dict:
     """Run (or resume) the full pipeline; returns per-table row counts.
 
-    ``fail_after_buckets`` processes only that many remaining buckets — the
-    hook the resume test uses to simulate a mid-run crash.
-    """
+    ``max_page_bytes`` is extract_docs' quarantine threshold; None
+    disables the gate."""
     checkpoint_path = os.path.join(out_dir, "checkpoint")
     meta_path = os.path.join(out_dir, "checkpoint_meta.json")
 
@@ -149,16 +150,10 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     todo = (lineage.remaining_pages(spark, pages, checkpoint_path, "docs",
                                     n_buckets)
             if resume else lineage.with_bucket(pages, n_buckets))
-    if fail_after_buckets is not None:
-        some = [r.bucket for r in
-                todo.select("bucket").distinct()
-                    .orderBy("bucket").limit(fail_after_buckets).collect()]
-        todo = todo.filter(F.col("bucket").isin(some))
 
     # buckets touched by THIS run. Fresh run (no checkpoint): all buckets
     # by construction — skip the discovery scan entirely.
-    checkpoint_exists = lineage._exists(checkpoint_path)
-    if resume and not checkpoint_exists and fail_after_buckets is None:
+    if resume and not lineage._exists(checkpoint_path):
         run_buckets = list(range(n_buckets))
     else:
         run_buckets = [r.bucket for r in
@@ -168,28 +163,24 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         # remaining pages — commit its sentinel now, or the no-op fast
         # path above can never close (e.g. resuming over a checkpoint
         # whose non-empty buckets are all committed but whose empty
-        # buckets predate sentinel rows). Guard: a fail_after_buckets
-        # run empties todo ARTIFICIALLY (its filter can select zero
-        # buckets), so only a full run may conclude emptiness. With
-        # resume=True, prior_done already IS the committed set (read
-        # moments ago, nothing written since); only a resume=False run
-        # (which skipped that read) must fetch it here — range - {}
-        # would otherwise stack full-range 'empty' sentinels onto
-        # buckets that hold real committed rows.
-        if fail_after_buckets is None:
-            committed = prior_done
-            if not resume and lineage._exists(checkpoint_path):
-                committed = {r.bucket for r in lineage.committed_buckets(
-                    spark, checkpoint_path, "docs").collect()}
-            missing = sorted(set(range(n_buckets)) - committed)
-            if missing:
-                # sentinels are checkpoint state too — the n_buckets
-                # contract must land first (same invariant as below)
-                _ensure_meta(out_dir, meta_path, n_buckets)
-                lineage.append_checkpoint(
-                    lineage.empty_bucket_sentinels(spark, missing,
-                                                   "docs"),
-                    checkpoint_path)
+        # buckets predate sentinel rows). With resume=True, prior_done
+        # already IS the committed set (read moments ago, nothing
+        # written since); only a resume=False run (which skipped that
+        # read) must fetch it here — range - {} would otherwise stack
+        # full-range 'empty' sentinels onto buckets that hold real
+        # committed rows.
+        committed = prior_done
+        if not resume and lineage._exists(checkpoint_path):
+            committed = {r.bucket for r in lineage.committed_buckets(
+                spark, checkpoint_path, "docs").collect()}
+        missing = sorted(set(range(n_buckets)) - committed)
+        if missing:
+            # sentinels are checkpoint state too — the n_buckets
+            # contract must land first (same invariant as below)
+            _ensure_meta(out_dir, meta_path, n_buckets)
+            lineage.append_checkpoint(
+                lineage.empty_bucket_sentinels(spark, missing, "docs"),
+                checkpoint_path)
         return {"docs": 0, "chunks": 0, "edges": 0, "checkpoint": 0,
                 "skipped": "nothing to do (all buckets committed)"}
 
@@ -206,59 +197,37 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         os.path.join(gazetteers_dir, "places.parquet"),
         os.path.join(gazetteers_dir, "orgs.parquet"))
 
-    # max_page_bytes: None (default) -> extract_docs' own 100 MiB
-    # default; 0 -> gate disabled; > 0 -> that threshold. (A plain
-    # pass-through of None would silently re-enable the default against
-    # extract_docs' documented "None disables".)
-    if max_page_bytes is None:
-        extract_kw = {}
-    elif max_page_bytes <= 0:
-        extract_kw = {"max_page_bytes": None}
-    else:
-        extract_kw = {"max_page_bytes": max_page_bytes}
     # The job's one shuffle and one Python pass, materialized once
     # (docs/serving.md batch rule): the three writes and the checkpoint
     # rows below all read it, so the pass runs exactly once per job.
     fused = extract_chunk_link(todo, gaz_bc,
                                min(n_buckets, len(run_buckets)),
-                               **extract_kw).localCheckpoint(eager=False)
+                               max_page_bytes).localCheckpoint(eager=False)
     docs = lineage.with_bucket(extract_mod.docs_projection(fused), n_buckets)
-    chunks = fused.select(F.inline("chunks"))
     docs_path = os.path.join(out_dir, "docs")
     chunks_path = os.path.join(out_dir, "chunks")
     edges_path = os.path.join(out_dir, "edges")
     lineage.write_partitioned(docs, docs_path)
-    lineage.write_partitioned(lineage.with_bucket(chunks, n_buckets),
-                              chunks_path)
+    lineage.write_partitioned(
+        lineage.with_bucket(fused.select(F.inline("chunks")), n_buckets),
+        chunks_path)
     lineage.write_partitioned(
         lineage.with_bucket(fused.select(F.inline("edges")), n_buckets),
         edges_path)
 
-    if with_mentions:
-        # raw mention spans (FIXTURES.md §3 'entities' table) — optional:
-        # a second Python pass over the chunks, off by default
-        mentions = lineage.with_bucket(
-            ner_mod.extract_mentions(chunks, gaz_bc)
-            .join(chunks.select("chunk_id", "url"), "chunk_id"),
-            n_buckets)
-        lineage.write_partitioned(
-            mentions, os.path.join(out_dir, "mentions"))
-
     # lineage/metrics rows LAST (commit point) — crash before this line ⇒
-    # buckets get reprocessed and dynamically overwritten next run.
-    ckpt = lineage.checkpoint_rows_with_failures(docs, "docs")
-    if fail_after_buckets is None:
-        # this run exhausted the todo set, so any bucket neither
-        # previously committed nor producing rows now has ZERO pages —
-        # commit sentinels so the no-op fast path closes over them.
-        # (A partial run — fail_after_buckets — must NOT: its untouched
-        # buckets may still hold pages.)
-        ckpt = ckpt.localCheckpoint()   # one evaluation: probe + append
-        have = {r.bucket for r in ckpt.select("bucket").collect()}
-        empty = sorted(set(range(n_buckets)) - prior_done - have)
-        if empty:
-            ckpt = ckpt.unionByName(
-                lineage.empty_bucket_sentinels(spark, empty, "docs"))
+    # buckets get reprocessed and dynamically overwritten next run. This
+    # run exhausted the todo set, so any bucket neither previously
+    # committed nor producing rows now has ZERO pages — commit sentinels
+    # so the no-op fast path closes over them. The rows are evaluated
+    # once (localCheckpoint): the bucket probe and the append read them.
+    ckpt = (lineage.checkpoint_rows_with_failures(docs, "docs")
+            .localCheckpoint())
+    have = {r.bucket for r in ckpt.select("bucket").collect()}
+    empty = sorted(set(range(n_buckets)) - prior_done - have)
+    if empty:
+        ckpt = ckpt.unionByName(
+            lineage.empty_bucket_sentinels(spark, empty, "docs"))
     lineage.append_checkpoint(ckpt, checkpoint_path)
 
     return {
@@ -279,16 +248,16 @@ def main(argv=None):
     ap.add_argument("--n-buckets", type=int, default=DEFAULT_N_BUCKETS)
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
-    def _non_negative_bytes(s: str) -> int:
+    def _page_bytes(s: str) -> int | None:
         v = int(s)
         if v < 0:
             # a typo'd negative must error, not silently disable the gate
             raise argparse.ArgumentTypeError(
                 "--max-page-bytes must be >= 0 (0 disables the gate)")
-        return v
+        return v or None
 
-    ap.add_argument("--max-page-bytes", type=_non_negative_bytes,
-                    default=None,
+    ap.add_argument("--max-page-bytes", type=_page_bytes,
+                    default=extract_mod.DEFAULT_MAX_PAGE_BYTES,
                     help="quarantine pages whose html or text exceeds "
                          "this many bytes (failure_code=OVERSIZED_INPUT). "
                          "Omit for the 100 MiB default; pass 0 to disable "

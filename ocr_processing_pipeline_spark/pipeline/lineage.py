@@ -87,14 +87,9 @@ def write_partitioned(df: DataFrame, path: str) -> None:
 
 def checkpoint_rows_with_failures(docs_with_bucket: DataFrame,
                                   table_name: str) -> DataFrame:
-    """Lineage rows incl. failure-code histogram as map<string,long>."""
-    has_timing = "extract_us" in docs_with_bucket.columns
-    timing_aggs = (
-        [F.avg("extract_us").alias("t_mean"),
-         F.max("extract_us").alias("t_max")]
-        if has_timing else
-        [F.lit(None).cast("double").alias("t_mean"),
-         F.lit(None).cast("long").alias("t_max")])
+    """Lineage rows incl. failure-code histogram as map<string,long>,
+    from the docs table (extract_docs' columns, extract_us included)
+    with its bucket column."""
     per_code = (
         docs_with_bucket
         .withColumn("code", F.when(F.col("failure_code") == "", "OK")
@@ -105,7 +100,8 @@ def checkpoint_rows_with_failures(docs_with_bucket: DataFrame,
              F.countDistinct("url").alias("n_urls_c"),
              F.min("warc_ts").alias("ts_min"),
              F.max("warc_ts").alias("ts_max"),
-             *timing_aggs)
+             F.avg("extract_us").alias("t_mean"),
+             F.max("extract_us").alias("t_max"))
     )
     return (
         per_code.groupBy("bucket")

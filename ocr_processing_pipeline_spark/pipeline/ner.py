@@ -48,19 +48,11 @@ _INDEX_CACHE: dict = {}
 _MEMO_MAX_ENTRIES = 1_000_000
 
 
-def _get_index(bc):
-    return _get_index_and_memo(bc)[0]
-
-
 def _get_index_and_memo(bc):
     # key on the uuid token shipped INSIDE the broadcast value: id(bc) can
     # be reused by a different broadcast after GC in a long-lived python
     # worker, which would serve a stale trie built from other gazetteers
-    value = bc.value
-    if isinstance(value, tuple) and len(value) == 4:
-        key, persons, places, orgs = value
-    else:  # legacy 3-tuple broadcasts (no token): fall back to identity
-        key, (persons, places, orgs) = id(bc), value
+    key, persons, places, orgs = bc.value
     entry = _INDEX_CACHE.get(key)
     if entry is None:
         from ..extractor.ner import GazetteerIndex
@@ -78,7 +70,7 @@ def load_gazetteers(spark: SparkSession, persons_path: str,
     """Read gazetteer parquet, collect (small), broadcast.
 
     The broadcast tuple carries a uuid token as a stable cache identity
-    for the per-worker trie singleton (see _get_index)."""
+    for the per-worker trie singleton (see _get_index_and_memo)."""
     import uuid
     persons = [r.asDict() for r in spark.read.parquet(persons_path).collect()]
     places = [r.asDict() for r in spark.read.parquet(places_path).collect()]
@@ -89,7 +81,7 @@ def load_gazetteers(spark: SparkSession, persons_path: str,
 
 def extract_mentions(chunks: DataFrame, gaz_bc) -> DataFrame:
     def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = _get_index(gaz_bc)
+        idx, _ = _get_index_and_memo(gaz_bc)
         for pdf in batches:
             rows = []
             for doc_id, chunk_id, content, lang in zip(

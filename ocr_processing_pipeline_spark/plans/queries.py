@@ -45,11 +45,24 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-# (sf_dir, name, parallelism) -> scan partition count. Pure file-layout
-# metadata (how many splits the scan yields), NOT query results — safe to
-# memo for the process lifetime; probing costs a plan->RDD conversion we
-# don't want to re-pay 85 times per bench sweep.
+# (sf_dir, name, layout fingerprint, parallelism) -> scan partition
+# count. Pure file-layout metadata (how many splits the scan yields), NOT
+# query results; probing costs a plan->RDD conversion we don't want to
+# re-pay 85 times per bench sweep. The fingerprint (_layout_fp of the
+# table path) changes when a table is rewritten in place, so a memo entry
+# never outlives the layout it counted.
 _SCAN_PARTS_MEMO: dict = {}
+
+
+def _layout_fp(path: str) -> str:
+    """``mtime_ns:size`` of a file or table directory ("missing" if
+    absent): rewriting a table (a new file, or a directory whose file set
+    changes) changes it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return "missing"
+    return f"{st.st_mtime_ns}:{st.st_size}"
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -74,7 +87,8 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     df = _t(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    key = (os.path.abspath(sf_dir), name, target)
+    key = (os.path.abspath(sf_dir), name,
+           _layout_fp(os.path.join(sf_dir, f"{name}.parquet")), target)
     n = _SCAN_PARTS_MEMO.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -2936,12 +2950,7 @@ def _materialized_cache_path(prefix: str, sf_dir: str, version: str,
     base = os.path.basename(os.path.normpath(sf_dir))
     phash = hashlib.md5(
         os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(doc_path)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "missing"
+    fp = _layout_fp(os.path.join(sf_dir, "documents.parquet"))
     tag = hashlib.md5(f"{version}:{fp}".encode()).hexdigest()[:8]
     cache_root = "/root/repo/.cache"
     out = os.path.join(cache_root,
@@ -2952,15 +2961,6 @@ def _materialized_cache_path(prefix: str, sf_dir: str, version: str,
             os.path.join(cache_root, f"{prefix}_{base}_{phash}_*.parquet")):
         if os.path.abspath(stale) != os.path.abspath(out):
             shutil.rmtree(stale, ignore_errors=True)
-    # pre-path-hash layout ({prefix}_{base}_{8-hex-tag}.parquet) entries
-    # are unreachable now — drop them too
-    import re
-    legacy_re = re.compile(
-        re.escape(f"{prefix}_{base}_") + r"[0-9a-f]{8}\.parquet$")
-    for legacy in glob.glob(
-            os.path.join(cache_root, f"{prefix}_{base}_*.parquet")):
-        if legacy_re.fullmatch(os.path.basename(legacy)):
-            shutil.rmtree(legacy, ignore_errors=True)
     return out
 
 

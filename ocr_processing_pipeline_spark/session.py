@@ -22,17 +22,19 @@ ARROW_MAX_RECORDS_PER_BATCH = 512
 
 def get_spark(app_name: str = "ocr_processing_pipeline_spark",
               cpus: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
+    builder = SparkSession.builder
+    # pyspark's own test (java_gateway.launch_gateway): a gateway port in
+    # the environment means spark-submit already launched the JVM, and its
+    # --master stands. Only a JVM this process launches runs local[cpus].
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cpus}]")
     builder = (
-        SparkSession.builder
-        .master(f"local[{cpus}]")
+        builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -252,3 +252,16 @@ def test_worker_memo_identity_per_broadcast(spark):
     bc2 = spark.sparkContext.broadcast(("tok2", [], [], []))
     idx2, memo2 = _get_index_and_memo(bc2)
     assert memo2 is not memo1 and "probe" not in memo2
+
+
+def test_scan_memo_follows_table_rewrite(spark, tmp_path):
+    """_ts memoizes a table's scan partition count keyed on the table
+    path's layout fingerprint: a table rewritten in place from 1 file to
+    8 files must lose its spread Exchange, not keep the 1-file decision."""
+    from ocr_processing_pipeline_spark.plans.queries import _ts
+    table = str(tmp_path / "t.parquet")
+    spark.range(800).coalesce(1).write.parquet(table)
+    assert "Exchange" in plan(_ts(spark, str(tmp_path), "t"), mode="simple")
+    spark.range(800).repartition(8).write.mode("overwrite").parquet(table)
+    assert "Exchange" not in plan(_ts(spark, str(tmp_path), "t"),
+                                  mode="simple")

@@ -3,11 +3,13 @@ Arrow batch (SCALE.md item 2) — the byte gate nulls the payload JVM-side,
 the row comes back failure-coded, the checkpoint histogram counts it, and
 every other page stays byte-identical."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_processing_pipeline_spark.extractor.core import (
     FailureCode, extract_page)
-from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
+from ocr_processing_pipeline_spark.pipeline.extract import (
+    DEFAULT_MAX_PAGE_BYTES, extract_docs)
 from ocr_processing_pipeline_spark.pipeline.lineage import (
     checkpoint_rows_with_failures, with_bucket)
 from ocr_processing_pipeline_spark.sources.corpus import make_pages
@@ -97,3 +99,21 @@ def test_cli_rejects_negative_max_page_bytes(capsys):
               "--max-page-bytes", "-1"])
     err = capsys.readouterr().err
     assert "must be >= 0" in err
+
+
+@pytest.mark.parametrize("flag, expected", [
+    (["--max-page-bytes", "0"], None),
+    ([], DEFAULT_MAX_PAGE_BYTES),
+    (["--max-page-bytes", "5"], 5),
+], ids=["zero_disables", "omitted_default", "threshold"])
+def test_cli_max_page_bytes_mapping(monkeypatch, flag, expected):
+    """The CLI maps its 0 sentinel to run_pipeline's None (gate off) and
+    passes every other value through; no job runs."""
+    from ocr_processing_pipeline_spark import session
+    from ocr_processing_pipeline_spark.pipeline import job
+    seen = {}
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(job, "run_pipeline",
+                        lambda *a, **k: seen.update(k) or {})
+    job.main(["--pages", "x", "--gazetteers-dir", "y", "--out", "z", *flag])
+    assert seen["max_page_bytes"] == expected

@@ -14,22 +14,55 @@ from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 N_BUCKETS = 8
 
 
+def _keep_checkpoint_rows(spark, out, cond):
+    """Rewrite out/checkpoint keeping only the rows matching ``cond`` —
+    the state a run leaves when it dies between its data writes and the
+    commit of the dropped rows."""
+    import shutil
+    path, tmp = os.path.join(out, "checkpoint"), os.path.join(out, "_ckpt")
+    spark.read.parquet(path).filter(cond).write.parquet(tmp)
+    shutil.rmtree(path)
+    os.rename(tmp, path)
+
+
+def _part_files(out, buckets):
+    """{(table, bucket, file name): mtime_ns} of the data part files."""
+    files = {}
+    for table in ("docs", "chunks", "edges"):
+        for b in buckets:
+            d = os.path.join(out, table, f"bucket={b}")
+            for f in (os.listdir(d) if os.path.isdir(d) else []):
+                if f.endswith(".parquet"):
+                    files[table, b, f] = os.stat(
+                        os.path.join(d, f)).st_mtime_ns
+    return files
+
+
 def test_partial_then_resume(spark, corpus_dir, tmp_path):
     out = str(tmp_path / "out")
     pages_path = f"{corpus_dir}/pages.parquet"
     n_pages = spark.read.parquet(pages_path).count()
 
-    # run 1: process only 3 buckets, then "crash"
-    c1 = run_pipeline(spark, pages_path, corpus_dir, out,
-                      n_buckets=N_BUCKETS, fail_after_buckets=3)
-    assert 0 < c1["docs"] < n_pages
-    assert c1["checkpoint"] == 3
+    # run 1 writes every bucket; then simulate a kill between the data
+    # write and the checkpoint commit for all but 3 buckets: their data
+    # stays on disk, their checkpoint rows are gone
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
+    committed = sorted(r.bucket for r in
+                       spark.read.parquet(f"{out}/checkpoint")
+                       .filter("row_count > 0").collect())[:3]
+    uncommitted = sorted(set(range(N_BUCKETS)) - set(committed))
+    _keep_checkpoint_rows(spark, out, F.col("bucket").isin(committed))
+    kept = _part_files(out, committed)
+    stale = _part_files(out, uncommitted)
+    assert kept and stale
 
-    # run 2: resume — must process ONLY the remaining buckets
+    # run 2: resume — must rewrite ONLY the uncommitted buckets
     c2 = run_pipeline(spark, pages_path, corpus_dir, out,
                       n_buckets=N_BUCKETS)
     assert c2["docs"] == n_pages
     assert c2["checkpoint"] == N_BUCKETS
+    assert _part_files(out, committed) == kept
+    assert not set(_part_files(out, uncommitted)) & set(stale)
 
     docs = spark.read.parquet(os.path.join(out, "docs"))
     # no duplicates, full coverage
@@ -42,16 +75,6 @@ def test_partial_then_resume(spark, corpus_dir, tmp_path):
     assert c3["docs"] == 0 and "skipped" in c3
     # and the stored tables are untouched
     assert spark.read.parquet(os.path.join(out, "docs")).count() == n_pages
-
-
-def test_with_mentions_table(spark, corpus_dir, tmp_path):
-    out = str(tmp_path / "out_m")
-    run_pipeline(spark, f"{corpus_dir}/pages.parquet", corpus_dir, out,
-                 n_buckets=4, with_mentions=True)
-    m = spark.read.parquet(os.path.join(out, "mentions"))
-    assert m.count() > 0
-    assert {"chunk_id", "mention", "entity_type", "span_start",
-            "span_end", "url", "bucket"} <= set(m.columns)
 
 
 def test_idempotent_rerun_no_resume(spark, corpus_dir, tmp_path):
@@ -106,19 +129,19 @@ def test_noop_fast_path_with_empty_buckets(spark, corpus_dir, tmp_path):
 
 def test_empty_todo_resume_backfills_sentinels(spark, corpus_dir, tmp_path):
     """A checkpoint whose non-empty buckets are all committed but whose
-    empty buckets carry no sentinel rows (e.g. written by a partial run)
-    must be healed by the next full resume: it finds todo empty, commits
-    the missing sentinels, and the no-op fast path closes from then on."""
+    empty buckets carry no sentinel rows must be healed by the next full
+    resume: it finds todo empty, commits the missing sentinels, and the
+    no-op fast path closes from then on."""
     small = str(tmp_path / "small_pages2.parquet")
     (spark.read.parquet(f"{corpus_dir}/pages.parquet").limit(10)
      .write.parquet(small))
     out = str(tmp_path / "out_backfill")
     n_buckets = 32
-    # partial-mode run that happens to cover every non-empty bucket —
-    # sentinels deliberately NOT committed (fail_after_buckets set)
-    c1 = run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets,
-                      fail_after_buckets=n_buckets)
-    assert 0 < c1["checkpoint"] < n_buckets
+    # a full run's checkpoint without its empty-bucket sentinel rows
+    run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets)
+    _keep_checkpoint_rows(spark, out, F.col("row_count") > 0)
+    n_rows = spark.read.parquet(f"{out}/checkpoint").count()
+    assert 0 < n_rows < n_buckets
     # full resume: todo is empty -> backfills the empty-bucket sentinels
     c2 = run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets)
     assert "skipped" in c2

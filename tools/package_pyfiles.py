@@ -3,7 +3,10 @@
 Usage:
     python tools/package_pyfiles.py [--out dist/ocr_processing_pipeline_spark.zip]
     spark-submit --py-files dist/ocr_processing_pipeline_spark.zip \\
-        -m ocr_processing_pipeline_spark.pipeline.job ...   # or a driver .py
+        tools/submit_job.py --pages ... --gazetteers-dir ... --out ...
+
+spark-submit runs a driver FILE, not a module: tools/submit_job.py is
+that file, and it calls the job's CLI (pipeline/job.py::main).
 
 The zip contains the package only (no tests/tools) so executors can import
 ``ocr_processing_pipeline_spark`` without the repo checkout.

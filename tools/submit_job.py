@@ -1,7 +1,12 @@
-"""spark-submit driver script for the extraction job.
+"""spark-submit driver file for the extraction job.
 
-The --py-files path: executors import the package from the shipped zip,
-the driver runs this file. Example (validated by tests/test_submit.py):
+spark-submit runs a driver FILE, not a module, so this file hands its
+arguments to the job's one CLI (``pipeline.job.main``): the flags, the
+defaults and the session config are the ones ``python -m
+ocr_processing_pipeline_spark.pipeline.job`` uses. spark-submit's
+--master stands (``session.get_spark`` leaves the master to it).
+Executors import the package from the shipped zip. Example (validated by
+tests/test_submit.py):
 
     python tools/package_pyfiles.py
     spark-submit --master 'local[8]' \\
@@ -10,44 +15,7 @@ the driver runs this file. Example (validated by tests/test_submit.py):
         --gazetteers-dir ... --out ...
 """
 
-from __future__ import annotations
-
-import argparse
-import json
-import time
-
-from pyspark.sql import SparkSession
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", required=True)
-    ap.add_argument("--gazetteers-dir", required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--n-buckets", type=int, default=64)
-    args = ap.parse_args()
-
-    # spark-submit owns the session config (master, py-files); we only add
-    # the engine's SQL-level settings on top.
-    spark = (SparkSession.builder
-             .appName("extraction_job_submit")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-             .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-
-    from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
-
-    t0 = time.time()
-    counts = run_pipeline(spark, args.pages, args.gazetteers_dir, args.out,
-                          n_buckets=args.n_buckets)
-    print(json.dumps({"elapsed_sec": round(time.time() - t0, 2), **counts}))
-    spark.stop()
-
+from ocr_processing_pipeline_spark.pipeline.job import main
 
 if __name__ == "__main__":
     main()
